@@ -342,52 +342,49 @@ STAGES = ["signatures", "edges", "clusters", "containment"]
 def run_pipeline_checkpointed(
     files: DataFrame, cfg, store: CheckpointStore
 ) -> dict:
-    """Checkpointed end-to-end run; each completed stage is skipped on
-    resume. Returns {stage: DataFrame} plus a ``resumed`` map."""
-    from sketchy_spark.operators.cluster import assign_clusters
-    from sketchy_spark.operators.lsh import candidate_pairs, exact_dup_edges
-    from sketchy_spark.operators.sketch import sketch_files
-    from sketchy_spark.operators.verify import (
-        containment_candidates,
-        containment_verified,
-        verified_pairs,
+    """Checkpointed end-to-end run over pipeline.py's stage functions;
+    each completed stage is skipped on resume. Returns {stage: DataFrame}
+    plus a ``resumed`` map. The cascade's n_files and the CC strategy's
+    n_edges come from the stage manifests, so no extra count() runs."""
+    from sketchy_spark.operators.cluster import assign_clusters_fid
+    from sketchy_spark.pipeline import (
+        containment_stage,
+        edges_stage,
+        signatures_stage,
+        verified_stage,
     )
 
     spark = files.sparkSession
     resumed: dict[str, bool] = {}
 
     signatures, resumed["signatures"] = store.get_or_compute(
-        spark, "signatures", lambda: sketch_files(files, cfg)
+        spark, "signatures", lambda: signatures_stage(files, cfg)
     )
 
     held: list[DataFrame] = []
 
     def _edges():
-        # candidate_pairs is lazy (single-evaluation contract) but
-        # verified_pairs broadcasts the pair frame twice; persist it for
-        # the duration of the stage write, released right after.
-        cand = candidate_pairs(signatures, cfg).persist()
-        held.append(cand)
-        ver = verified_pairs(cand, signatures, cfg)
-        return (
-            exact_dup_edges(signatures)
-            .unionByName(ver.select("a_id", "b_id"))
-            .distinct()
+        _, verified = verified_stage(
+            signatures, files, cfg, held,
+            n_files=store.manifest("signatures")["rows"],
         )
+        return edges_stage(signatures, verified)
 
     edges, resumed["edges"] = store.get_or_compute(spark, "edges", _edges)
-    for df in held:  # stage parquet is written; the cache served its job
+    for df in held:  # stage is written; the caches served their job
         df.unpersist()
 
     clusters, resumed["clusters"] = store.get_or_compute(
-        spark, "clusters", lambda: assign_clusters(signatures, edges)
+        spark,
+        "clusters",
+        lambda: assign_clusters_fid(
+            signatures, edges, n_edges=store.manifest("edges")["rows"]
+        ),
     )
     containment, resumed["containment"] = store.get_or_compute(
         spark,
         "containment",
-        lambda: containment_verified(
-            containment_candidates(signatures, cfg), files
-        ),
+        lambda: containment_stage(signatures, files, cfg),
     )
     return {
         "signatures": signatures,

@@ -4,9 +4,9 @@ Iterative min-label propagation in the DataFrame API: each round every
 vertex takes the minimum label among itself and its neighbors; fixpoint
 when no label changes. Duplicate clusters are small and dense (diameter
 a few hops), so convergence is fast; ``localCheckpoint`` each round cuts
-the join lineage (SURVEY §4.3). Cluster id = lexicographic min member —
-deterministic, unlike the reference's HashMap-order consensus ties
-(src/sketchy.rs:408).
+the join lineage (SURVEY §4.3). Components run on fid longs; a cluster is
+labeled by the file_id of its minimum-fid member — deterministic, unlike
+the reference's HashMap-order consensus ties (src/sketchy.rs:408).
 """
 
 from __future__ import annotations
@@ -34,7 +34,8 @@ def connected_components(
     n_edges: int | None = None,
 ) -> DataFrame:
     """edges(a_id, b_id) -> (file_id, cluster_id) for every vertex that
-    appears in an edge. Labels are file_id strings; min is lexicographic.
+    appears in an edge; each vertex is labeled by its component's minimum
+    id. The 'driver' strategy takes long ids (fids on the engine path).
 
     strategy: 'auto' (size-based), 'driver' (local union-find),
     'distributed' (pointer-doubling min-label propagation).
@@ -66,8 +67,8 @@ def _timing(label: str, t0: float) -> None:
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Collect edges (Arrow), union-find over factorized int ids, return
-    labels. Deterministic: cluster label = lexicographic min member."""
+    """Collect long-keyed edges (Arrow), union-find over factorized ids,
+    return labels. Deterministic: cluster label = min member id."""
     import time
 
     import numpy as np
@@ -79,7 +80,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     if len(pdf) == 0:
         return spark.createDataFrame(
-            [], "file_id string, cluster_id string"
+            [], "file_id long, cluster_id long"
         )
     t0 = time.time()
     codes, uniques = pd.factorize(
@@ -104,20 +105,13 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
         if np.array_equal(nxt, prev):
             break
         parent = nxt
-    # deterministic label: min member per root. fid-keyed edges (the
-    # pipeline path) are int64 -> pure numpy scatter-min (a pandas
-    # groupby-transform here measured 1.5s at 1M edges, the largest
-    # driver-serial slice of the whole run); string ids keep the pandas
-    # path.
-    if np.issubdtype(np.asarray(uniques).dtype, np.integer):
-        u = np.asarray(uniques, dtype=np.int64)
-        lab = np.full(len(u), np.iinfo(np.int64).max)
-        np.minimum.at(lab, parent, u)
-        out = pd.DataFrame({"file_id": u, "cluster_id": lab[parent]})
-    else:
-        members = pd.DataFrame({"file_id": uniques, "root": parent})
-        label = members.groupby("root")["file_id"].transform("min")
-        out = pd.DataFrame({"file_id": uniques, "cluster_id": label})
+    # deterministic label: min member per root, as a pure numpy
+    # scatter-min (a pandas groupby-transform here measured 1.5s at 1M
+    # edges, the largest driver-serial slice of the whole run)
+    u = np.asarray(uniques, dtype=np.int64)
+    lab = np.full(len(u), np.iinfo(np.int64).max)
+    np.minimum.at(lab, parent, u)
+    out = pd.DataFrame({"file_id": u, "cluster_id": lab[parent]})
     _timing("uf.unionfind+label", t0)
     t0 = time.time()
     df = spark.createDataFrame(out)  # Arrow path, not row pickling
@@ -225,50 +219,27 @@ def _distributed_components(
     raise ConvergenceError(f"no fixpoint after {max_iter} iterations")
 
 
-def assign_clusters(
-    signatures: DataFrame, edges: DataFrame, max_iter: int = 25,
-    strategy: str = "auto", n_edges: int | None = None,
-) -> DataFrame:
-    """All files -> cluster assignment; files in no edge are singleton
-    clusters labeled by their own file_id.
-
-    Public invariant (VERDICT r5 #8): the output is a PARTITION of the
-    input — every distinct input file_id appears in exactly one row
-    (the left join keeps every file; coalesce labels edge-less files by
-    themselves), so consumers may group by cluster_id without an
-    existence check. Asserted by
-    tests/test_pipeline_e2e.py::test_every_file_assigned_exactly_once.
-
-    ``n_edges``: already-known edge count (e.g. summed from checkpoint
-    manifests) — skips the 'auto' strategy's own count() action."""
-    cc = connected_components(
-        edges, max_iter=max_iter, strategy=strategy, n_edges=n_edges
-    )
-    return (
-        signatures.select("file_id")
-        .join(cc, "file_id", "left")
-        .select(
-            "file_id",
-            F.coalesce("cluster_id", "file_id").alias("cluster_id"),
-        )
-    )
-
-
 def assign_clusters_fid(
     signatures: DataFrame, edges_fid: DataFrame, max_iter: int = 25,
     strategy: str = "auto", n_edges: int | None = None,
 ) -> DataFrame:
-    """Cluster assignment from fid-keyed edges (a_fid, b_fid): connected
-    components run entirely on int64 labels (cheap compares, 16-byte
-    shuffle rows); the string cluster label — the minimum-fid member's
-    file_id — attaches afterwards via one broadcast-size join per root.
-    Output contract matches :func:`assign_clusters`:
-    (file_id, cluster_id) with singletons labeled by their own file_id,
-    and the same partition invariant — every distinct input file_id in
-    exactly one output row.
+    """All files -> (file_id, cluster_id) from fid-keyed edges (a_fid,
+    b_fid). Connected components run entirely on int64 labels (cheap
+    compares, 16-byte shuffle rows); the string cluster label — the
+    minimum-fid member's file_id — attaches afterwards via one
+    broadcast-size join per root. Files in no edge are singleton clusters
+    labeled by their own file_id.
 
-    ``n_edges``: already-known edge count (skips the strategy count).
-    The pipeline deliberately does NOT pass it: its edges frame is
+    Public invariant (VERDICT r5 #8): the output is a PARTITION of the
+    input — every distinct input file_id appears in exactly one row (the
+    left join keeps every file; coalesce labels edge-less files by
+    themselves), so consumers may group by cluster_id without an
+    existence check. Asserted by
+    tests/test_pipeline_e2e.py::test_every_file_assigned_exactly_once.
+
+    ``n_edges``: already-known edge count (e.g. from checkpoint
+    manifests) — skips the 'auto' strategy's own count() action. The
+    batch pipeline deliberately does NOT pass it: its edges frame is
     freshly persisted, and this count doubles as the cache's
     materialization barrier — dropping it just moves the same job into
     the union-find's toPandas.

@@ -38,8 +38,9 @@ def with_fid(signatures: DataFrame) -> DataFrame:
 
 
 def exact_dup_edges_fid(signatures: DataFrame) -> DataFrame:
-    """Star edges (a_fid, b_fid) within identical-sha256 groups — the fid
-    twin of :func:`exact_dup_edges`, shuffling (sha256, fid) rows only.
+    """Star edges (group-min fid, member fid) within identical-sha256
+    groups: exact duplicates connect in O(group) edges instead of
+    O(group²) pairs, shuffling (sha256, fid) rows only.
 
     Needed despite LSH catching identical content too: degenerate
     identical files (empty / shorter than a shingle) have no shingles, so
@@ -75,11 +76,8 @@ def band_keys_expr(cfg: SketchConfig):
 def band_table(
     signatures: DataFrame, cfg: SketchConfig, id_col: str = "file_id"
 ) -> DataFrame:
-    """(id, band_key) — one row per band per file.
-
-    ``id_col='file_id'`` keeps the public string contract (streaming /
-    tests); the pipeline's candidate generator shuffles fid longs instead.
-    """
+    """(id, band_key) — one row per band per file; ``id_col='fid'``
+    keys the rows by fid longs, as every engine path does."""
     src = with_fid(signatures) if id_col == "fid" else signatures
     return src.select(
         id_col, F.explode(band_keys_expr(cfg)).alias("band_key")
@@ -342,58 +340,4 @@ def attach_file_ids(
         fid_pairs.join(a, "a_fid")
         .join(b, "b_fid")
         .select("a_id", "b_id", *other)
-    )
-
-
-def candidate_pairs(
-    signatures: DataFrame, cfg: SketchConfig, cache_bands: bool = True
-) -> DataFrame:
-    """Distinct candidate (a_id, b_id) strings with a_id < b_id (public
-    form; heavy lifting happens on fid longs — see candidate_pairs_fid)."""
-    pairs = attach_file_ids(candidate_pairs_fid(signatures, cfg), signatures)
-    # fid order and string order can disagree; normalize to a_id < b_id
-    return pairs.select(
-        F.least("a_id", "b_id").alias("a_id"),
-        F.greatest("a_id", "b_id").alias("b_id"),
-    ).distinct()
-
-
-def candidate_pairs_join(
-    signatures: DataFrame, cfg: SketchConfig
-) -> DataFrame:
-    """Self-join formulation of candidate generation (kept as the
-    reference plan shape; more stages, same output as candidate_pairs)."""
-    bands = band_table(signatures, cfg).persist()
-    hot = hot_band_keys(bands, cfg.band_skew_cap)
-    cold = bands.join(F.broadcast(hot), "band_key", "left_anti")
-    a = cold.alias("a")
-    b = cold.alias("b")
-    return (
-        a.join(b, "band_key")
-        .where(F.col("a.file_id") < F.col("b.file_id"))
-        .select(
-            F.col("a.file_id").alias("a_id"),
-            F.col("b.file_id").alias("b_id"),
-        )
-        .distinct()
-    )
-
-
-def exact_dup_edges(signatures: DataFrame) -> DataFrame:
-    """Star edges (member -> group-min) within identical-sha256 groups.
-
-    Exact duplicates connect in O(group) edges instead of O(group²) pairs —
-    the cheap path the LSH join never needs to see. Analogue of the
-    self-match == s invariant (docs/index.md:149): identical content is a
-    duplicate by definition. One slim window shuffle — no driver-side
-    broadcast build (a ~sha256-cardinality broadcast is serial time).
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("sha256")
-    return (
-        signatures.select("sha256", "file_id")
-        .withColumn("hub", F.min("file_id").over(w))
-        .where(F.col("file_id") != F.col("hub"))
-        .select(F.col("hub").alias("a_id"), F.col("file_id").alias("b_id"))
     )

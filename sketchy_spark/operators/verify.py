@@ -1,22 +1,16 @@
 """Candidate verification (G2/G3/G4): Jaccard estimate, SimHash distance,
 exact-substring containment.
 
-Two equivalent Jaccard-verification implementations:
+Jaccard verification has one entry point, :func:`verified_pairs_cascade`.
+Its exact kernel, :func:`verified_pairs`, is the reference's two-pointer
+sorted-merge (src/sketchy.rs:419-459) done with np.intersect1d/np.union1d
+over Arrow batches of the already-sorted bottom-s sigs, ~30us per pair.
+Slim signatures (no bottom-s column) first go through a cheap 128-slot
+estimate, and only borderline pairs reach the exact kernel.
 
-- :func:`verified_pairs_sql` — built-in array SQL (array_union/sort/
-  intersect). Oracle-friendly, but Catalyst's array set-ops build hash
-  sets per row: ~ms per 1000-element pair.
-- :func:`verified_pairs` (default) — Arrow-batched numpy sorted-merge:
-  the reference's two-pointer kernel (src/sketchy.rs:419-459) done with
-  np.intersect1d/np.union1d on the already-sorted sigs, ~30us per pair.
-  Same estimator, ~100x less CPU; this is the honest re-expression of
-  the reference's "assumes hashes are sorted" fast path.
-
-Key narrowness: the pipeline hands this module fid-keyed pairs
-(a_fid/b_fid int64, see operators/lsh.py) so every join and shuffle here
-moves 16-byte keys; string file_ids are attached once, to the final
-verified set only. The public string-keyed entry points remain for tests
-and ad-hoc use.
+Key narrowness: pairs are fid-keyed (a_fid/b_fid int64, see
+operators/lsh.py), so every join and shuffle here moves 16-byte keys;
+string file_ids are attached once, to the final verified set only.
 """
 
 from __future__ import annotations
@@ -29,95 +23,51 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from sketchy_spark.config import SketchConfig
-
-
-# Caches persisted by verified_pairs_cascade for callers that provided no
-# ``persisted`` release list (ad-hoc / public use): the persists are
-# required for correctness (see the in-function comments on exchange
-# reuse), so rather than leaking anonymously they are tracked here.
-# Long-lived sessions reclaim executor storage with
-# :func:`release_cascade_caches`.
-_CASCADE_CACHES: list[DataFrame] = []
-
-
-def release_cascade_caches() -> None:
-    """Unpersist every cache the cascade retained on behalf of callers
-    that passed no ``persisted`` list (ADVICE r3: repeated ad-hoc calls in
-    a long-lived session otherwise accumulate unreleasable caches)."""
-    while _CASCADE_CACHES:
-        df = _CASCADE_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _key_cols(pairs: DataFrame) -> tuple[str, str, str, str]:
-    """(a_col, b_col, signature key col, spark type) by pair key mode."""
-    if "a_fid" in pairs.columns:
-        return "a_fid", "b_fid", "fid", "long"
-    return "a_id", "b_id", "file_id", "string"
-
-
-def _keyed_signatures(signatures: DataFrame, key: str) -> DataFrame:
-    if key == "fid" and "fid" not in signatures.columns:
-        from sketchy_spark.operators.lsh import with_fid
-
-        return with_fid(signatures)
-    return signatures
+from sketchy_spark.operators.lsh import attach_file_ids, with_fid
+from sketchy_spark.operators.sketch import sketch_files
 
 
 def _with_sides(
-    pairs: DataFrame, signatures: DataFrame, cols: list[str],
-    broadcast_pairs: bool | None = None,
+    pairs: DataFrame, signatures: DataFrame, cols: list[str]
 ) -> DataFrame:
-    """Attach both sides' signature columns to each pair.
+    """Attach both sides' signature columns to each (a_fid, b_fid) pair.
 
-    Plain path: two shuffle joins — but each shuffles the FULL signatures
-    table (wide: sig arrays), which dwarfs the pair set. Broadcast path
-    (default when the pair count is modest): broadcast the pair ids into
-    two scan-side hash joins of signatures (no signature shuffle), then
-    join the two halves on the pair key — shuffles only O(|pairs|) rows.
-    At 100 TB the pair table after LSH is orders of magnitude smaller
-    than the signatures table, so this is the scale-correct default;
-    pass broadcast_pairs=False when candidate volume explodes.
+    Shuffle joins would move the FULL signatures table (wide: sig
+    arrays), which dwarfs the pair set. Instead the pair ids are
+    broadcast into two scan-side hash joins of signatures (no signature
+    shuffle), and the two halves join on the pair key — shuffling only
+    O(|pairs|) rows. At 100 TB the pair table after LSH is orders of
+    magnitude smaller than the signatures table.
     """
-    if broadcast_pairs is None:
-        broadcast_pairs = True
-    a_col, b_col, key, _ = _key_cols(pairs)
-    sigs = _keyed_signatures(signatures, key)
+    sigs = with_fid(signatures)
     a = sigs.select(
-        F.col(key).alias(a_col),
+        F.col("fid").alias("a_fid"),
         *[F.col(c).alias(f"a_{c}") for c in cols],
     )
     b = sigs.select(
-        F.col(key).alias(b_col),
+        F.col("fid").alias("b_fid"),
         *[F.col(c).alias(f"b_{c}") for c in cols],
     )
-    if not broadcast_pairs:
-        return pairs.join(a, a_col).join(b, b_col)
-    left = F.broadcast(pairs).join(a, a_col)
-    right = F.broadcast(pairs).join(b, b_col)
-    return left.join(right, [a_col, b_col])
+    left = F.broadcast(pairs).join(a, "a_fid")
+    right = F.broadcast(pairs).join(b, "b_fid")
+    return left.join(right, ["a_fid", "b_fid"])
 
 
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
 
 
 def verified_pairs(
-    pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    broadcast_pairs: bool | None = None,
+    pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig
 ) -> DataFrame:
-    """Arrow-kernel Jaccard verification (default path; see module doc).
+    """Exact bottom-s Jaccard verification of (a_fid, b_fid) pairs.
 
-    Estimator identical to :func:`verified_pairs_sql`: with
-    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. Sorted-merge per pair —
-    the reference's two-pointer kernel — plus vectorized simhash hamming.
-    Accepts string- (a_id/b_id) or fid- (a_fid/b_fid) keyed pairs and
-    returns the same key columns it was given.
+    With U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U| (exact for docs with
+    fewer than s shingles, whose sketches are the full sets). Sorted-merge
+    per pair — the reference's two-pointer kernel — plus vectorized
+    simhash hamming. Returns (a_fid, b_fid, jaccard, hamming) for pairs
+    with jaccard >= tau; ``signatures`` must carry the ``sig`` column.
     """
-    a_col, b_col, _, key_type = _key_cols(pairs)
-    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
+    df = _with_sides(pairs, signatures, ["sig", "simhash"])
     s = cfg.s
     tau = cfg.jaccard_threshold
 
@@ -148,8 +98,8 @@ def verified_pairs(
             ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
             out = pd.DataFrame(
                 {
-                    a_col: pdf[a_col],
-                    b_col: pdf[b_col],
+                    "a_fid": pdf["a_fid"],
+                    "b_fid": pdf["b_fid"],
                     "jaccard": jac,
                     "hamming": ham,
                 }
@@ -157,13 +107,9 @@ def verified_pairs(
             yield out[out["jaccard"] >= tau]
 
     return df.select(
-        a_col, b_col, "a_sig", "b_sig", "a_simhash", "b_simhash"
+        "a_fid", "b_fid", "a_sig", "b_sig", "a_simhash", "b_simhash"
     ).mapInPandas(
-        fn,
-        schema=(
-            f"{a_col} {key_type}, {b_col} {key_type}, "
-            "jaccard double, hamming long"
-        ),
+        fn, schema="a_fid long, b_fid long, jaccard double, hamming long"
     )
 
 
@@ -171,47 +117,95 @@ def verified_pairs_cascade(
     pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
     margin: float = 0.15, files: DataFrame | None = None,
     n_files: int | None = None, resident: bool | None = None,
-    attach_ids: bool = True, persisted: list | None = None,
+    attach_ids: bool = True, *, persisted: list,
 ) -> DataFrame:
-    """Two-stage verification cascade (SURVEY G4: full estimator only for
-    borderline pairs). Returns string-keyed (a_id, b_id, jaccard, hamming)
-    by default; ``attach_ids=False`` keeps fid keys (the pipeline's
-    internal flow, which stays fid-typed through connected components).
+    """Jaccard verification of (a_fid, b_fid) candidate pairs. Returns
+    string-keyed (a_id, b_id, jaccard, hamming) by default;
+    ``attach_ids=False`` keeps fid keys (the pipeline's internal flow,
+    which stays fid-typed through connected components).
 
-    Stage 1 transfers only the 128-slot OPH signature (+simhash) per pair
-    and computes est = matching_slots / num_perm. Pairs with
-    est >= tau + margin are accepted, est < tau - margin rejected
-    (binomial error at 4-sigma ~ 1e-5 — negligible vs the 0.99 recall
-    budget). Stage 2 runs the bottom-s estimator only on the borderline
-    band. Cuts Arrow transfer ~7x (sig_perm is 1KB vs sig's 8KB).
+    Signatures that carry the bottom-s ``sig`` column go straight to the
+    exact kernel :func:`verified_pairs`. Incremental stores keep ``sig``
+    because earlier batches' content is gone and cannot be re-sketched;
+    there the cheap stage below would add a resident collect and a count
+    per batch, which cost more than the bottom-s transfer they save.
+
+    Slim signatures run a two-stage cascade (SURVEY G4: full estimator
+    only for borderline pairs). Stage 1 transfers only the 128-slot OPH
+    signature (+simhash) per pair and computes est = matching_slots /
+    num_perm. Pairs with est >= tau + margin are accepted, est < tau -
+    margin rejected (binomial error at 4-sigma ~ 1e-5 — negligible vs
+    the 0.99 recall budget). Stage 2 re-sketches only the borderline
+    files from ``files`` and runs the exact kernel on them. Cuts Arrow
+    transfer ~7x (sig_perm is 1KB vs sig's 8KB).
 
     Small-document guard: OPH rotation densification is biased for docs
-    with fewer shingles than signature slots (A={x}, B={x,y} estimates
-    0.99 vs true 0.5), so any pair where either side has
-    n_shingles < num_perm bypasses BOTH the accept and the reject branch
-    and goes straight to stage-2 exact verification (for such docs the
-    bottom-s sketch is the full set, so stage 2 is exact).
+    with fewer shingles than signature slots (a one-shingle doc and a
+    five-shingle doc extending it estimate 0.87 against a true 0.2), so
+    any pair where either side has n_shingles < num_perm bypasses BOTH
+    the accept and the reject branch and goes straight to stage-2 exact
+    verification (for such docs the bottom-s sketch is the full set, so
+    stage 2 is exact).
 
     ``n_files``: pass the already-known signature count (e.g. from the
-    pipeline's eager-cache count) to avoid a second full-table count —
-    each driver barrier is serial time that caps scaling efficiency.
+    pipeline's eager-cache count or a checkpoint manifest) to avoid a
+    second full-table count — each driver barrier is serial time that
+    caps scaling efficiency.
     ``resident``: force the broadcast (True) or scan-side join (False)
     stage-1 attach; default picks by table size.
     ``persisted``: list receiving every frame this function persists, for
-    the caller to unpersist. Without it the caches are tracked in a
-    module registry instead — reclaim with :func:`release_cascade_caches`
-    in long-lived sessions.
+    the caller to unpersist.
     """
+    if "sig" in signatures.columns:
+        out = verified_pairs(pairs, signatures, cfg)
+    else:
+        out = _cascade(
+            pairs, with_fid(signatures), cfg, margin, files, n_files,
+            resident, persisted,
+        )
+    if not attach_ids:
+        return out
+    return attach_file_ids(out, signatures).select(
+        F.least("a_id", "b_id").alias("a_id"),
+        F.greatest("a_id", "b_id").alias("b_id"),
+        "jaccard",
+        "hamming",
+    )
+
+
+def _cascade(
+    pairs: DataFrame, sigs: DataFrame, cfg: SketchConfig, margin: float,
+    files: DataFrame | None, n_files: int | None, resident: bool | None,
+    persisted: list,
+) -> DataFrame:
+    """Stages 1 and 2 of :func:`verified_pairs_cascade` over slim,
+    fid-carrying signatures."""
+    if files is None:
+        raise ValueError("signatures lack 'sig' and no files source given")
     tau = cfg.jaccard_threshold
     num_perm = cfg.num_perm
-    min_sh = num_perm  # densification-bias bound (see docstring)
-    spark = signatures.sparkSession
-    a_col, b_col, key, key_type = _key_cols(pairs)
-    sigs = _keyed_signatures(signatures, key)
+    min_sh = num_perm  # densification-bias bound (see the cascade doc)
+
+    def estimate(a, b, a_sim, b_sim, a_nsh, b_nsh, pdf) -> pd.DataFrame:
+        n = len(pdf)
+        est = (a == b).sum(axis=1) / num_perm
+        x = a_sim ^ b_sim
+        ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
+        small = (a_nsh < min_sh) | (b_nsh < min_sh)
+        out = pd.DataFrame(
+            {
+                "a_fid": pdf["a_fid"],
+                "b_fid": pdf["b_fid"],
+                "jaccard": est,
+                "hamming": ham,
+                "needs_exact": small,
+            }
+        )
+        return out[small | (est >= tau - margin)]
 
     # Resident-collection strategy (the reference keeps every reference
     # sketch in memory and scans it per query, src/sketchy.rs:81): when
-    # the slim signature map fits an executor, ship (key -> sig_perm,
+    # the slim signature map fits an executor, ship (fid -> sig_perm,
     # simhash) as a broadcast variable and evaluate pairs map-side — no
     # attach joins at all. Falls back to scan-side joins beyond the cap.
     # Resident is only a win while the broadcast stays trivially small:
@@ -222,7 +216,7 @@ def verified_pairs_cascade(
     # signatures map-side) scales with workers and is the 100 TB default.
     if resident is None:
         if n_files is None:
-            n_files = signatures.count()
+            n_files = sigs.count()
         resident = n_files * (cfg.num_perm * 4 + 24) < 30_000_000
 
     if resident:
@@ -230,7 +224,7 @@ def verified_pairs_cascade(
         # into an (n, num_perm) int64 matrix zero-copy — no pandas object
         # column, no per-row vstack (both are serial driver time).
         tbl = (
-            sigs.select(key, "sig_perm", "simhash", "n_shingles")
+            sigs.select("fid", "sig_perm", "simhash", "n_shingles")
             .toArrow()
             .combine_chunks()
         )
@@ -243,78 +237,39 @@ def verified_pairs_cascade(
             sig_mat = np.zeros((0, num_perm), dtype=np.int64)
         sim_vec = tbl["simhash"].to_numpy(zero_copy_only=False).astype(np.int64)
         nsh_vec = tbl["n_shingles"].to_numpy(zero_copy_only=False).astype(np.int64)
-        if key == "fid":
-            keys = tbl[key].to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.argsort(keys)
-            payload = (
-                keys[order], sig_mat[order], sim_vec[order], nsh_vec[order]
-            )
-
-            def lookup(bc_val, col: pd.Series) -> np.ndarray:
-                return np.searchsorted(bc_val[0], col.to_numpy(dtype=np.int64))
-        else:
-            index = {f: i for i, f in enumerate(tbl[key].to_pylist())}
-            payload = (index, sig_mat, sim_vec, nsh_vec)
-
-            def lookup(bc_val, col: pd.Series) -> np.ndarray:
-                idx = bc_val[0]
-                return np.array([idx[x] for x in col], dtype=np.int64)
-
-        bc = spark.sparkContext.broadcast(payload)
+        keys = tbl["fid"].to_numpy(zero_copy_only=False).astype(np.int64)
+        order = np.argsort(keys)
+        bc = sigs.sparkSession.sparkContext.broadcast(
+            (keys[order], sig_mat[order], sim_vec[order], nsh_vec[order])
+        )
 
         def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            val = bc.value
-            _, mat, sim, nsh = val
+            keys, mat, sim, nsh = bc.value
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
-                ai = lookup(val, pdf[a_col])
-                bi = lookup(val, pdf[b_col])
-                est = (mat[ai] == mat[bi]).sum(axis=1) / num_perm
-                x = sim[ai] ^ sim[bi]
-                ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
-                small = (nsh[ai] < min_sh) | (nsh[bi] < min_sh)
-                out = pd.DataFrame(
-                    {
-                        a_col: pdf[a_col],
-                        b_col: pdf[b_col],
-                        "jaccard": est,
-                        "hamming": ham,
-                        "needs_exact": small,
-                    }
+                ai = np.searchsorted(keys, pdf["a_fid"].to_numpy(dtype=np.int64))
+                bi = np.searchsorted(keys, pdf["b_fid"].to_numpy(dtype=np.int64))
+                yield estimate(
+                    mat[ai], mat[bi], sim[ai], sim[bi], nsh[ai], nsh[bi], pdf
                 )
-                yield out[small | (est >= tau - margin)]
 
         src = pairs
     else:
         def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                n = len(pdf)
-                if n == 0:
+                if len(pdf) == 0:
                     continue
-                a = np.vstack(pdf["a_sig_perm"].to_numpy())
-                b = np.vstack(pdf["b_sig_perm"].to_numpy())
-                est = (a == b).sum(axis=1) / num_perm
-                x = (
-                    pdf["a_simhash"].to_numpy(dtype=np.int64)
-                    ^ pdf["b_simhash"].to_numpy(dtype=np.int64)
+
+                def col(c: str) -> np.ndarray:
+                    return pdf[c].to_numpy(dtype=np.int64)
+
+                yield estimate(
+                    np.vstack(pdf["a_sig_perm"].to_numpy()),
+                    np.vstack(pdf["b_sig_perm"].to_numpy()),
+                    col("a_simhash"), col("b_simhash"),
+                    col("a_n_shingles"), col("b_n_shingles"), pdf,
                 )
-                ham = _POPCNT8[x.view(np.uint8).reshape(n, 8)].sum(axis=1)
-                small = (
-                    (pdf["a_n_shingles"].to_numpy(dtype=np.int64) < min_sh)
-                    | (pdf["b_n_shingles"].to_numpy(dtype=np.int64) < min_sh)
-                )
-                out = pd.DataFrame(
-                    {
-                        a_col: pdf[a_col],
-                        b_col: pdf[b_col],
-                        "jaccard": est,
-                        "hamming": ham,
-                        "needs_exact": small,
-                    }
-                )
-                yield out[small | (est >= tau - margin)]
 
         # The scan-side attach broadcasts the pair frame twice (a- and
         # b-side). ReusedExchange can NOT be assumed to dedupe the two
@@ -323,27 +278,23 @@ def verified_pairs_cascade(
         # so an unmaterialized pair frame would execute its full DAG
         # twice. The pipeline pre-persists pairs (candidate_pairs_fid
         # eager path); for any other caller, persist here and hand the
-        # cache to ``persisted`` (or track it in the module registry when
-        # no release list was provided — correctness over a leak, but a
-        # reclaimable one: see release_cascade_caches).
+        # cache to ``persisted``.
         from pyspark import StorageLevel
 
         if pairs.storageLevel == StorageLevel.NONE:
             pairs = pairs.persist()
-            (persisted if persisted is not None else _CASCADE_CACHES).append(
-                pairs
-            )
+            persisted.append(pairs)
         src = _with_sides(
             pairs, sigs, ["sig_perm", "simhash", "n_shingles"]
         ).select(
-            a_col, b_col, "a_sig_perm", "b_sig_perm", "a_simhash",
+            "a_fid", "b_fid", "a_sig_perm", "b_sig_perm", "a_simhash",
             "b_simhash", "a_n_shingles", "b_n_shingles",
         )
 
     coarse = src.mapInPandas(
         stage1,
         schema=(
-            f"{a_col} {key_type}, {b_col} {key_type}, jaccard double, "
+            "a_fid long, b_fid long, jaccard double, "
             "hamming long, needs_exact boolean"
         ),
     ).persist()
@@ -351,104 +302,34 @@ def verified_pairs_cascade(
     # query stages; AQE materializes them concurrently, and concurrent
     # consumers of a lazily-persisted frame each run their own evaluation.
     coarse.count()
-    (persisted if persisted is not None else _CASCADE_CACHES).append(coarse)
+    persisted.append(coarse)
     accepted = coarse.where(
         (~F.col("needs_exact")) & (F.col("jaccard") >= tau + margin)
     ).drop("needs_exact")
     borderline = coarse.where(
         F.col("needs_exact") | (F.col("jaccard") < tau + margin)
-    ).select(a_col, b_col)
+    ).select("a_fid", "b_fid")
 
-    if "sig" in signatures.columns:
-        sig_source = sigs
-    else:
-        # slim signatures (no bottom-s column): re-sketch only the
-        # borderline files — O(|borderline|), not O(corpus)
-        if files is None:
-            raise ValueError(
-                "signatures lack 'sig' and no files source given"
-            )
-        from sketchy_spark.operators.lsh import with_fid
-        from sketchy_spark.operators.sketch import sketch_files
-
-        wanted_keys = (
-            borderline.select(F.col(a_col).alias(key))
-            .unionAll(borderline.select(F.col(b_col).alias(key)))
-            .distinct()
-        )
-        wanted_ids = (
-            sigs.select(key, "file_id")
-            .join(F.broadcast(wanted_keys), key, "left_semi")
-            .select("file_id")
-        )
-        wanted = files.join(
-            F.broadcast(wanted_ids),
-            F.concat_ws("/", "repo", "path") == F.col("file_id"),
-            "left_semi",
-        )
-        sig_source = sketch_files(wanted, cfg, with_sig=True)
-        if key == "fid":
-            sig_source = with_fid(sig_source)
-    refined = verified_pairs(borderline, sig_source, cfg)
-    out = accepted.unionByName(refined)
-
-    if key == "fid" and attach_ids:
-        from sketchy_spark.operators.lsh import attach_file_ids
-
-        out = attach_file_ids(out, signatures).select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-            "jaccard",
-            "hamming",
-        )
-    return out
-
-
-def verified_pairs_sql(
-    pairs: DataFrame, signatures: DataFrame, cfg: SketchConfig,
-    broadcast_pairs: bool | None = None,
-) -> DataFrame:
-    """Estimate Jaccard per candidate pair; keep pairs >= tau.
-
-    Bottom-s estimator (unbiased for sets larger than s): with
-    U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. The shifted-int64 storage
-    (SURVEY §4.2) makes ``array_sort``'s signed order equal unsigned hash
-    order, so slice-after-sort is exactly bottom-s of the union. For docs
-    with < s shingles the sketches are the full sets and the estimate is
-    exact. SimHash hamming distance is reported (filtering on it is the
-    caller's choice — G2 is a secondary signal, not a recall gate).
-    """
-    df = _with_sides(pairs, signatures, ["sig", "simhash"], broadcast_pairs)
-    # materialize union_s as a column so the sort/union evaluates once per
-    # row instead of once per referencing expression
-    staged = df.select(
-        "a_id",
-        "b_id",
-        "a_sig",
-        "b_sig",
-        F.slice(F.array_sort(F.array_union("a_sig", "b_sig")), 1, cfg.s).alias(
-            "union_s"
-        ),
-        F.bit_count(
-            F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))
-        ).alias("hamming"),
+    # re-sketch only the borderline files — O(|borderline|), not O(corpus)
+    wanted_fids = (
+        borderline.select(F.col("a_fid").alias("fid"))
+        .unionAll(borderline.select(F.col("b_fid").alias("fid")))
+        .distinct()
     )
-    inter3 = F.array_intersect(
-        F.array_intersect("union_s", "a_sig"), F.col("b_sig")
+    wanted_ids = (
+        sigs.select("fid", "file_id")
+        .join(F.broadcast(wanted_fids), "fid", "left_semi")
+        .select("file_id")
     )
-    return (
-        staged.select(
-            "a_id",
-            "b_id",
-            "hamming",
-            F.when(
-                F.size("union_s") > 0,
-                F.size(inter3) / F.size("union_s"),
-            ).otherwise(F.lit(0.0)).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select("a_id", "b_id", "jaccard", "hamming")
+    wanted = files.join(
+        F.broadcast(wanted_ids),
+        F.concat_ws("/", "repo", "path") == F.col("file_id"),
+        "left_semi",
     )
+    refined = verified_pairs(
+        borderline, sketch_files(wanted, cfg, with_sig=True), cfg
+    )
+    return accepted.unionByName(refined)
 
 
 def containment_candidates(
@@ -583,13 +464,15 @@ def containment_verified(
     # would otherwise race the unpopulated cache, re-running the
     # content-wide candidate joins twice.
     staged.count()
-    full = staged.where(F.instr("big_c", "small_c") > 0).select(
+    # the substring must be a Column: a plain string is read as a literal
+    is_sub = F.instr("big_c", F.col("small_c")) > 0
+    full = staged.where(is_sub).select(
         "small_id",
         "big_id",
         F.lit(1.0).alias("containment"),
         F.col("small_nb").cast("long").alias("overlap_chars"),
     )
-    rest = staged.where(F.instr("big_c", "small_c") == 0).select(
+    rest = staged.where(~is_sub).select(
         "small_id", "big_id", "small_c", "big_c", "small_nb"
     )
     partial = _partial_overlap_kernel(rest, cfg, min_overlap_chars)

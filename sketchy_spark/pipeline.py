@@ -1,11 +1,16 @@
-"""End-to-end dedup pipeline orchestration.
+"""End-to-end dedup pipeline: the stage graph, defined once.
 
 files(repo, path, commit, lang, content)
-  -> sketch (mapInPandas, the only UDF stage)
-  -> signatures            [narrow table: content pruned]
-  -> exact edges (sha256)  + LSH candidates -> Jaccard-verified pairs
-  -> connected components  -> clusters
-  -> containment pairs     [fingerprint candidates -> instr verification]
+  -> signatures   sketch (mapInPandas, the only UDF stage), slim, + fid
+  -> edges        exact (sha256) edges + LSH candidates -> verify cascade
+  -> clusters     connected components over the fid edges
+  -> containment  fingerprint candidates -> instr / run verification
+
+One function per stage, over fid frames. :func:`run_pipeline` chains
+them with in-memory persists; ``checkpoint.run_pipeline_checkpointed``
+chains the same functions through a checkpoint store, and the
+incremental path (streaming/incremental.py) reuses the verification and
+cluster operators around its new-vs-all band join.
 
 The Spark re-expression of `sketchy predict` end-to-end (SURVEY §3.1),
 with the all-pairs kernel replaced by LSH (G1) and ranking replaced by
@@ -33,6 +38,61 @@ from sketchy_spark.operators.verify import (
     containment_verified,
     verified_pairs_cascade,
 )
+
+
+def signatures_stage(
+    files: DataFrame, cfg: SketchConfig, with_fp: bool = True
+) -> DataFrame:
+    """Slim signatures with ``fid``. The bottom-s sig column (8 KB/row) is
+    only ever read for borderline pairs, which the cascade re-sketches on
+    demand — the working set stays ~2 KB/row. ``with_fp=False`` skips the
+    winnow fingerprints, which only the containment stage reads."""
+    return with_fid(
+        sketch_files(files, cfg, with_sig=False, with_fp=with_fp)
+    )
+
+
+def verified_stage(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig,
+    persisted: list, n_files: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidates, verified): LSH candidate pairs and the cascade's
+    verified pairs, both fid-keyed. Every frame the two operators persist
+    is appended to ``persisted`` for the caller to release. Without
+    ``n_files`` the cascade counts ``signatures`` after the candidate
+    stage's first action has populated any signature cache."""
+    candidates = candidate_pairs_fid(signatures, cfg, persisted=persisted)
+    verified = verified_pairs_cascade(
+        candidates, signatures, cfg, files=files, n_files=n_files,
+        attach_ids=False, persisted=persisted,
+    )
+    return candidates, verified
+
+
+def edges_stage(signatures: DataFrame, verified: DataFrame) -> DataFrame:
+    """Distinct (a_fid, b_fid) edges: sha-identical stars + verified pairs."""
+    return (
+        exact_dup_edges_fid(signatures)
+        .unionByName(verified.select("a_fid", "b_fid"))
+        .distinct()
+    )
+
+
+def containment_stage(
+    signatures: DataFrame, files: DataFrame, cfg: SketchConfig
+) -> DataFrame:
+    """(small_id, big_id, containment, overlap_chars) verified pairs."""
+    # candidate threshold drops to a quarter of the small side's
+    # fingerprints: partial verbatim overlaps (a shared block that is
+    # NOT a whole-file embedding) must reach the run-verify kernel
+    return containment_verified(
+        containment_candidates(
+            signatures, cfg,
+            min_containment=min(0.25, cfg.containment_threshold),
+        ),
+        files,
+        cfg,
+    )
 
 
 @dataclass
@@ -64,7 +124,7 @@ def run_pipeline(
 ) -> PipelineResult:
     """Run the full dedup pipeline lazily; materialization points are the
     caller's choice (tests collect; bench writes; checkpointed runs go
-    through streaming/incremental.py).
+    through checkpoint.run_pipeline_checkpointed).
 
     ``range_partition=True`` inserts ``repartitionByRange('lang','repo')``
     at ingest (north-star partitioning): co-locates same-language/repo
@@ -77,20 +137,14 @@ def run_pipeline(
     """
     if range_partition:
         files = files.repartitionByRange("lang", "repo")
-    # Slim sketch pass: the bottom-s sig column (8 KB/row) is only ever
-    # read for borderline pairs, which the cascade re-sketches on demand —
-    # the cached working set stays ~2 KB/row. Winnow fingerprints are
-    # skipped entirely when the containment pass is off.
-    signatures = with_fid(
-        sketch_files(files, cfg, with_sig=False, with_fp=with_containment)
-    )
+    signatures = signatures_stage(files, cfg, with_fp=with_containment)
     if cache_signatures:
         # signatures feed 3+ downstream stages; recomputing the UDF stage
         # per consumer would triple the dominant cost. The cache is
         # populated by candidate_pairs_fid's hot-key collect — the FIRST
         # action below — in the same job that shuffles the band table, so
-        # no separate eager count pass runs (one barrier fewer; that job
-        # also reports n_files for the cascade's resident sizing).
+        # no separate eager count pass runs (one barrier fewer); the
+        # cascade's n_files count that follows is a memory scan.
         signatures = signatures.cache()
 
     # The whole pair/edge flow stays in fid longs (16-byte shuffle keys,
@@ -98,21 +152,13 @@ def run_pipeline(
     # ``internal`` collects every frame the stages persist (band cache,
     # candidate pairs, coarse estimates) so unpersist() can release them.
     internal: list[DataFrame] = []
-    fid_candidates = candidate_pairs_fid(signatures, cfg, persisted=internal)
-    # the cache is populated by the candidate stage's first action, so
-    # this count is a memory scan (cheap), not a second sketch pass
-    n_files = signatures.count() if cache_signatures else None
-    verified_fid = verified_pairs_cascade(
-        fid_candidates, signatures, cfg, files=files, n_files=n_files,
-        attach_ids=False, persisted=internal,
-    ).persist()  # consumed by edges AND exposed as .verified
-    edges_fid = (
-        exact_dup_edges_fid(signatures)
-        .unionByName(verified_fid.select("a_fid", "b_fid"))
-        .distinct()
-        .persist()  # connected_components probes size + labels
+    fid_candidates, verified_fid = verified_stage(
+        signatures, files, cfg, internal
     )
-    clusters = assign_clusters_fid(signatures, edges_fid)
+    verified_fid = verified_fid.persist()  # edges AND .verified read it
+    # connected components probes the edges' size, then labels them
+    edges = edges_stage(signatures, verified_fid).persist()
+    clusters = assign_clusters_fid(signatures, edges)
 
     # public result keeps the string pair contract (lazy attachment)
     candidates = attach_file_ids(fid_candidates, signatures).select(
@@ -125,20 +171,9 @@ def run_pipeline(
         "jaccard",
         "hamming",
     )
-    edges = edges_fid
 
     if with_containment:
-        # candidate threshold drops to a quarter of the small side's
-        # fingerprints: partial verbatim overlaps (a shared block that is
-        # NOT a whole-file embedding) must reach the run-verify kernel
-        cont = containment_verified(
-            containment_candidates(
-                signatures, cfg,
-                min_containment=min(0.25, cfg.containment_threshold),
-            ),
-            files,
-            cfg,
-        )
+        cont = containment_stage(signatures, files, cfg)
     else:
         cont = (
             signatures.sparkSession.createDataFrame(

@@ -46,12 +46,10 @@ def get_spark(
     # Arrow's default pool mmaps per batch; route through glibc (above
     # thresholds) instead — measured 30% faster sketch stage at 32 workers
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    master = master or os.environ.get("SKETCHY_MASTER", "local[*]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SKETCHY_SHUFFLE_PARTITIONS", "32"))
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         # AQE: runtime re-plan, partition coalescing, skew-join splitting —
         # the backstop for hot band keys (SURVEY §4.1)
         .config("spark.sql.adaptive.enabled", "true")
@@ -89,7 +87,6 @@ def get_spark(
         # route there when it has real capacity (>= 8 GiB free). On a
         # real cluster leave this to the manager's fast local volumes.
         .config("spark.local.dir", _default_local_dir())
-        .config("spark.driver.memory", os.environ.get("SKETCHY_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", os.environ.get("SKETCHY_UI", "false"))
         # Multi-executor masters (local-cluster / standalone): executor
         # python workers need the package on their import path — the
@@ -112,11 +109,21 @@ def get_spark(
             "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL",
             os.environ["ARROW_DEFAULT_MEMORY_POOL"],
         )
-        .config(
-            "spark.executor.memory",
-            os.environ.get("SKETCHY_EXECUTOR_MEM", "6g"),
-        )
     )
+    # Under spark-submit (its PythonRunner hands this process the JVM
+    # through PYSPARK_GATEWAY_PORT) the launcher owns master and memory.
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = (
+            b.master(master or os.environ.get("SKETCHY_MASTER", "local[*]"))
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SKETCHY_DRIVER_MEM", "8g"),
+            )
+            .config(
+                "spark.executor.memory",
+                os.environ.get("SKETCHY_EXECUTOR_MEM", "6g"),
+            )
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -6,8 +6,12 @@ The dedup graft models incremental arrival as snapshot-increment batches
 (SURVEY §1.5, §2.7 R38): each new batch is sketched, banded against the
 *accumulated* signature store (new x all — never all x all), verified,
 and the edge set grows monotonically; clusters are recomputed from the
-full edge set (cheap: edges ≪ files). Invariant (FIXTURES §3): after N
-batches the clusters equal the single-shot run on the union.
+full edge set (cheap: edges ≪ files). Everything is fid-keyed, and the
+verification and cluster operators are the batch pipeline's
+(pipeline.py), so after N batches the clusters — rows and labels — equal
+the single-shot run on the union (FIXTURES §3). Batch signatures keep
+the bottom-s ``sig`` column: an earlier batch's content is gone by the
+time a later batch pairs with it, so it cannot be re-sketched.
 
 Write I/O is O(batch), not O(corpus): every batch APPENDS two immutable
 stages — ``sig_batch_NNNNN`` and ``edges_batch_NNNNN`` — and the rolling
@@ -35,10 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sketchy_spark.checkpoint import CheckpointStore
 from sketchy_spark.config import SketchConfig
-from sketchy_spark.operators.cluster import assign_clusters
-from sketchy_spark.operators.lsh import band_table, hot_band_keys
+from sketchy_spark.operators.cluster import assign_clusters_fid
+from sketchy_spark.operators.lsh import band_table, hot_band_keys, with_fid
 from sketchy_spark.operators.sketch import sketch_files
-from sketchy_spark.operators.verify import verified_pairs
+from sketchy_spark.operators.verify import verified_pairs_cascade
 
 
 def _new_vs_all_candidates(
@@ -47,8 +51,9 @@ def _new_vs_all_candidates(
     cfg: SketchConfig,
     prev_sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """Band join restricted to pairs touching a new file: the incremental
-    form of G1. Work is O(|new| x collision) instead of O(|all|²).
+    """(a_fid, b_fid) band join restricted to pairs touching a new file:
+    the incremental form of G1. Work is O(|new| x collision) instead of
+    O(|all|²).
 
     Hot band keys (> cap members in the accumulated corpus) are excluded
     from the all-pairs join and handled like the batch path's salted
@@ -58,41 +63,41 @@ def _new_vs_all_candidates(
     O(|new|) extra candidates.
 
     The hub MUST come from the pre-batch corpus when the band has prior
-    members: taking min(file_id) over the accumulated bands (old bug)
-    let a new arrival that sorts below all existing members become the
-    hub itself — it then matched the ``file_id != hub`` filter nowhere,
+    members: taking min(fid) over the accumulated bands (old bug) let a
+    new arrival that sorts below all existing members become the hub
+    itself — it then matched the ``fid != hub`` filter nowhere,
     got zero edges, and every other new member linked only to it,
     splitting the clique from its previously-ingested component. With a
     pre-batch hub every new member (including a new global minimum)
     links into the existing component; the batch-local minimum is the
     hub only for bands with no prior members at all.
     """
-    new_bands = band_table(new_sigs, cfg)
-    all_bands = band_table(all_sigs, cfg)
+    new_bands = band_table(new_sigs, cfg, id_col="fid")
+    all_bands = band_table(all_sigs, cfg, id_col="fid")
     hot = hot_band_keys(all_bands, cfg.band_skew_cap)
     new_cold = new_bands.join(F.broadcast(hot), "band_key", "left_anti")
     all_cold = all_bands.join(F.broadcast(hot), "band_key", "left_anti")
-    n = new_cold.select(F.col("file_id").alias("n_id"), "band_key")
-    m = all_cold.select(F.col("file_id").alias("m_id"), "band_key")
+    n = new_cold.select(F.col("fid").alias("n_fid"), "band_key")
+    m = all_cold.select(F.col("fid").alias("m_fid"), "band_key")
     pairs = (
         n.join(m, "band_key")
-        .where(F.col("n_id") != F.col("m_id"))
+        .where(F.col("n_fid") != F.col("m_fid"))
         .select(
-            F.least("n_id", "m_id").alias("a_id"),
-            F.greatest("n_id", "m_id").alias("b_id"),
+            F.least("n_fid", "m_fid").alias("a_fid"),
+            F.greatest("n_fid", "m_fid").alias("b_fid"),
         )
     )
     batch_hub = (
         new_bands.join(F.broadcast(hot), "band_key", "left_semi")
         .groupBy("band_key")
-        .agg(F.min("file_id").alias("bhub"))
+        .agg(F.min("fid").alias("bhub"))
     )
     if prev_sigs is not None:
         prev_hub = (
-            band_table(prev_sigs, cfg)
+            band_table(prev_sigs, cfg, id_col="fid")
             .join(F.broadcast(hot), "band_key", "left_semi")
             .groupBy("band_key")
-            .agg(F.min("file_id").alias("phub"))
+            .agg(F.min("fid").alias("phub"))
         )
         hubs = batch_hub.join(prev_hub, "band_key", "left").select(
             "band_key", F.coalesce("phub", "bhub").alias("hub")
@@ -101,10 +106,10 @@ def _new_vs_all_candidates(
         hubs = batch_hub.select("band_key", F.col("bhub").alias("hub"))
     hot_star = (
         new_bands.join(F.broadcast(hubs), "band_key")
-        .where(F.col("file_id") != F.col("hub"))
+        .where(F.col("fid") != F.col("hub"))
         .select(
-            F.least("file_id", "hub").alias("a_id"),
-            F.greatest("file_id", "hub").alias("b_id"),
+            F.least("fid", "hub").alias("a_fid"),
+            F.greatest("fid", "hub").alias("b_fid"),
         )
     )
     return pairs.unionByName(hot_star).distinct()
@@ -113,7 +118,8 @@ def _new_vs_all_candidates(
 def _incremental_exact_edges(
     new_sigs: DataFrame, prev_sigs: DataFrame | None
 ) -> DataFrame:
-    """Sha-identical edges touching the new batch only, O(|new|) output.
+    """Sha-identical (a_fid, b_fid) edges touching the new batch only,
+    O(|new|) output.
 
     Each new file links to its sha-group's anchor: the group minimum of
     the PREVIOUS corpus when the sha was already seen (keeps the new
@@ -121,12 +127,10 @@ def _incremental_exact_edges(
     minimum. Connectivity is what connected components needs — the edge
     sets differ from the single-shot run, the clusters do not.
     """
-    batch_min = new_sigs.groupBy("sha256").agg(
-        F.min("file_id").alias("bhub")
-    )
+    batch_min = new_sigs.groupBy("sha256").agg(F.min("fid").alias("bhub"))
     if prev_sigs is not None:
         prev_min = prev_sigs.groupBy("sha256").agg(
-            F.min("file_id").alias("phub")
+            F.min("fid").alias("phub")
         )
         anchors = batch_min.join(prev_min, "sha256", "left").select(
             "sha256", F.coalesce("phub", "bhub").alias("hub")
@@ -134,10 +138,10 @@ def _incremental_exact_edges(
     else:
         anchors = batch_min.select("sha256", F.col("bhub").alias("hub"))
     return (
-        new_sigs.select("sha256", "file_id")
+        new_sigs.select("sha256", "fid")
         .join(anchors, "sha256")
-        .where(F.col("file_id") != F.col("hub"))
-        .select(F.col("hub").alias("a_id"), F.col("file_id").alias("b_id"))
+        .where(F.col("fid") != F.col("hub"))
+        .select(F.col("hub").alias("a_fid"), F.col("fid").alias("b_fid"))
     )
 
 
@@ -243,7 +247,8 @@ class IncrementalDedup:
         return self._union(self.view_stages("sig", before))
 
     def edges(self) -> DataFrame | None:
-        """Distinct verified + exact edges across every ingested batch.
+        """Distinct verified + exact (a_fid, b_fid) edges across every
+        ingested batch.
 
         The distinct is load-bearing for EXTERNAL consumers (ADVICE r4):
         a batch retried after a LATER batch already landed re-emits the
@@ -371,7 +376,8 @@ class IncrementalDedup:
             return  # terminal marker present -> fully ingested
 
         new_sigs, _ = self.store.get_or_compute(
-            self.spark, stage_sig, lambda: sketch_files(files, self.cfg)
+            self.spark, stage_sig,
+            lambda: with_fid(sketch_files(files, self.cfg)),
         )
         # "prev" = every OTHER ingested batch, by INGEST-TIME order, not
         # id order: an out-of-order BACKFILL (id below already-ingested
@@ -396,11 +402,16 @@ class IncrementalDedup:
         cand = _new_vs_all_candidates(
             new_sigs, all_sigs, self.cfg, prev_sigs=prev_sigs
         )
-        ver = verified_pairs(cand, all_sigs, self.cfg).select("a_id", "b_id")
+        held: list[DataFrame] = []
+        ver = verified_pairs_cascade(
+            cand, all_sigs, self.cfg, attach_ids=False, persisted=held
+        ).select("a_fid", "b_fid")
         exact = _incremental_exact_edges(new_sigs, prev_sigs)
         self.store.write_stage(
             stage_edge, ver.unionByName(exact).distinct()
         )
+        for df in held:
+            df.unpersist()
         if self.compact_every:
             tail = [
                 s for s in self.view_stages("edges") if "_batch_" in s
@@ -420,4 +431,4 @@ class IncrementalDedup:
         # cross-stage retry duplicates, which can only shift the strategy
         # cutoff toward the distributed (always-correct) path.
         edges = self._union(self.view_stages("edges"))
-        return assign_clusters(sigs, edges, n_edges=self.n_edges())
+        return assign_clusters_fid(sigs, edges, n_edges=self.n_edges())

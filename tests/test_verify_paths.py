@@ -1,31 +1,207 @@
-"""Arrow and SQL verification paths must agree exactly."""
+"""Verification paths: the exact kernel against a built-in SQL oracle,
+each branch of the verification cascade, and containment."""
 
+import pyspark.sql.functions as F
 import pytest
 
 from sketchy_spark.config import SketchConfig
 from sketchy_spark.corpus import corpus_pandas
-from sketchy_spark.operators.lsh import candidate_pairs
+from sketchy_spark.operators.cluster import assign_clusters_fid
+from sketchy_spark.operators.lsh import candidate_pairs_fid, with_fid
 from sketchy_spark.operators.sketch import sketch_files
-from sketchy_spark.operators.verify import verified_pairs, verified_pairs_sql
+from sketchy_spark.operators.verify import (
+    verified_pairs,
+    verified_pairs_cascade,
+)
 
 CFG = SketchConfig()
 
 
+def verified_pairs_sql(pairs, signatures, cfg):
+    """Oracle for :func:`verified_pairs`: the same bottom-s estimator in
+    built-in array SQL (array_union/sort/intersect), ~100x slower.
+
+    With U = bottom_s(A ∪ B), j ≈ |U ∩ A ∩ B| / |U|. The shifted-int64
+    storage makes ``array_sort``'s signed order equal unsigned hash
+    order, so slice-after-sort is exactly bottom-s of the union."""
+    sigs = with_fid(signatures)
+
+    def side(p):
+        return sigs.select(
+            F.col("fid").alias(f"{p}_fid"),
+            F.col("sig").alias(f"{p}_sig"),
+            F.col("simhash").alias(f"{p}_simhash"),
+        )
+
+    staged = pairs.join(side("a"), "a_fid").join(side("b"), "b_fid").select(
+        "a_fid",
+        "b_fid",
+        "a_sig",
+        "b_sig",
+        F.slice(F.array_sort(F.array_union("a_sig", "b_sig")), 1, cfg.s).alias(
+            "union_s"
+        ),
+        F.bit_count(
+            F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))
+        ).alias("hamming"),
+    )
+    inter3 = F.array_intersect(
+        F.array_intersect("union_s", "a_sig"), F.col("b_sig")
+    )
+    return (
+        staged.select(
+            "a_fid",
+            "b_fid",
+            "hamming",
+            F.when(
+                F.size("union_s") > 0,
+                F.size(inter3) / F.size("union_s"),
+            ).otherwise(F.lit(0.0)).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= cfg.jaccard_threshold)
+    )
+
+
+def _verdicts(df):
+    return {
+        (r["a_fid"], r["b_fid"]): (round(r["jaccard"], 9), r["hamming"])
+        for r in df.collect()
+    }
+
+
 def test_arrow_and_sql_verify_agree(spark):
-    sigs = sketch_files(
-        spark.createDataFrame(corpus_pandas(400)), CFG
+    sigs = with_fid(
+        sketch_files(spark.createDataFrame(corpus_pandas(400)), CFG)
     ).cache()
-    cand = candidate_pairs(sigs, CFG).cache()
-    arrow = {
-        (r["a_id"], r["b_id"]): (round(r["jaccard"], 9), r["hamming"])
-        for r in verified_pairs(cand, sigs, CFG).collect()
-    }
-    sql = {
-        (r["a_id"], r["b_id"]): (round(r["jaccard"], 9), r["hamming"])
-        for r in verified_pairs_sql(cand, sigs, CFG).collect()
-    }
-    assert arrow == sql
+    cand = candidate_pairs_fid(sigs, CFG).cache()
+    arrow = _verdicts(verified_pairs(cand, sigs, CFG))
+    assert arrow == _verdicts(verified_pairs_sql(cand, sigs, CFG))
     assert len(arrow) > 0
+
+
+@pytest.fixture(scope="module")
+def cascade_corpus(spark):
+    """400 planted files: full and slim signatures plus their candidates."""
+    files = spark.createDataFrame(corpus_pandas(400)).cache()
+    full = with_fid(sketch_files(files, CFG)).cache()
+    slim = with_fid(sketch_files(files, CFG, with_sig=False)).cache()
+    cand = candidate_pairs_fid(full, CFG).cache()
+    yield files, full, slim, cand
+    for df in (files, full, slim, cand):
+        df.unpersist()
+
+
+def _spy_sketch(monkeypatch):
+    """Record every frame the cascade re-sketches."""
+    from sketchy_spark.operators import verify as V
+
+    seen = []
+    orig = V.sketch_files
+
+    def spy(df, *a, **kw):
+        seen.append(df)
+        return orig(df, *a, **kw)
+
+    monkeypatch.setattr(V, "sketch_files", spy)
+    return seen
+
+
+@pytest.mark.parametrize("resident", [True, False])
+def test_cascade_on_slim_signatures_matches_exact_kernel(
+    cascade_corpus, monkeypatch, resident
+):
+    """Slim signatures take stage 1 — the resident broadcast or the
+    scan-side attach — and re-sketch only the borderline files; the
+    verified pair set equals the exact kernel's over full signatures."""
+    files, full, slim, cand = cascade_corpus
+    resketched = _spy_sketch(monkeypatch)
+    held = []
+    got = verified_pairs_cascade(
+        cand, slim, CFG, files=files, resident=resident, attach_ids=False,
+        persisted=held,
+    )
+    want = set(_verdicts(verified_pairs(cand, full, CFG)))
+    assert set(_verdicts(got)) == want and len(want) > 0
+    assert len(resketched) == 1
+    n_resketched = resketched[0].count()
+    assert 0 < n_resketched < files.count()
+    assert held  # the coarse estimates were persisted for the caller
+    for df in held:
+        df.unpersist()
+
+
+def test_cascade_with_sig_runs_exact_kernel_directly(
+    cascade_corpus, monkeypatch
+):
+    """Signatures carrying ``sig`` skip stage 1: the output is exactly
+    :func:`verified_pairs`', nothing is persisted or re-sketched. By
+    default the pairs come back as ordered file_id strings."""
+    from sketchy_spark.operators.lsh import attach_file_ids
+
+    files, full, _slim, cand = cascade_corpus
+    resketched = _spy_sketch(monkeypatch)
+    held = []
+    got = verified_pairs_cascade(
+        cand, full, CFG, files=files, attach_ids=False, persisted=held
+    )
+    want = verified_pairs(cand, full, CFG)
+    assert _verdicts(got) == _verdicts(want)
+    assert held == [] and resketched == []
+    named = verified_pairs_cascade(cand, full, CFG, persisted=held)
+    assert {tuple(r) for r in named.collect()} == {
+        (min(r.a_id, r.b_id), max(r.a_id, r.b_id), r.jaccard, r.hamming)
+        for r in attach_file_ids(want, full).collect()
+    }
+
+
+def test_cascade_small_document_guard(spark):
+    """A one-shingle doc and a five-shingle doc that extends it: OPH
+    densification estimates 0.87 (over the accept bar tau + margin)
+    against a true Jaccard of 0.2. The guard sends the pair to the exact
+    stage, which rejects it."""
+    a, b = "0123456789abcdef", "0123456789abcdefS935"
+    files = spark.createDataFrame(
+        [("org/t", "a.txt", "c1", "txt", a), ("org/t", "b.txt", "c2", "txt", b)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    slim = with_fid(sketch_files(files, CFG, with_sig=False))
+    ra, rb = slim.orderBy("fid").collect()
+    est = sum(x == y for x, y in zip(ra.sig_perm, rb.sig_perm)) / CFG.num_perm
+    assert est >= CFG.jaccard_threshold + 0.15  # stage 1 alone would accept
+    assert ra.n_shingles < CFG.num_perm
+    pair = spark.createDataFrame([(ra.fid, rb.fid)], "a_fid long, b_fid long")
+    held = []
+    got = verified_pairs_cascade(
+        pair, slim, CFG, files=files, n_files=2, attach_ids=False,
+        persisted=held,
+    ).collect()
+    assert got == []
+    for df in held:
+        df.unpersist()
+
+
+def _clique_files(spark, n_members, n_others=0):
+    import pandas as pd
+
+    base = "\n".join(
+        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
+    )
+    # tiny unique suffix: near-dup (not sha-identical), so the exact
+    # sha256 path cannot shortcut connectivity
+    rows = [
+        ("org/clique", f"src/f{m}.py", f"c{m}", "py", base + f"\n# member {m}")
+        for m in range(n_members)
+    ]
+    for m in range(n_others):  # unrelated singletons
+        body = "\n".join(
+            f"val v_{m}_{i} = compute_{m}({i * m + 3})" for i in range(80)
+        )
+        rows.append(("org/other", f"src/s{m}.rs", f"d{m}", "rs", body))
+    return spark.createDataFrame(
+        pd.DataFrame(
+            rows, columns=["repo", "path", "commit", "lang", "content"]
+        )
+    )
 
 
 def test_overcap_neardup_group_salted_recall(spark):
@@ -33,41 +209,16 @@ def test_overcap_neardup_group_salted_recall(spark):
     cluster: over-cap band keys emit salted star edges (member -> salt-min
     -> hub) instead of being dropped, so recall cannot silently fall when
     a true duplicate group exceeds the cap (VERDICT r1 #3)."""
-    import pandas as pd
-
-    from sketchy_spark.operators.cluster import assign_clusters
-    from sketchy_spark.operators.lsh import candidate_pairs_fid
-    from sketchy_spark.operators.verify import verified_pairs_cascade
-
-    base = "\n".join(
-        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
-    )
-    rows = []
-    for m in range(40):  # clique of 40 >> cap of 8
-        # tiny unique suffix: near-dup (not sha-identical), so the exact
-        # sha256 path cannot shortcut connectivity
-        rows.append(
-            ("org/clique", f"src/f{m}.py", f"c{m}", "py",
-             base + f"\n# member {m}")
-        )
-    for m in range(30):  # unrelated singletons
-        body = "\n".join(
-            f"val v_{m}_{i} = compute_{m}({i * m + 3})" for i in range(80)
-        )
-        rows.append(("org/other", f"src/s{m}.rs", f"d{m}", "rs", body))
-    files = spark.createDataFrame(
-        pd.DataFrame(
-            rows, columns=["repo", "path", "commit", "lang", "content"]
-        )
-    )
+    files = _clique_files(spark, 40, n_others=30)  # clique of 40 >> cap 8
     cfg = SketchConfig(band_skew_cap=8)
-    sigs = sketch_files(files, cfg).cache()
+    sigs = with_fid(sketch_files(files, cfg)).cache()
     n = sigs.count()
+    held = []
     cand = candidate_pairs_fid(sigs, cfg)
-    verified = verified_pairs_cascade(cand, sigs, cfg, n_files=n)
-    clusters = assign_clusters(
-        sigs, verified.select("a_id", "b_id")
-    ).toPandas()
+    verified = verified_pairs_cascade(
+        cand, sigs, cfg, n_files=n, attach_ids=False, persisted=held
+    )
+    clusters = assign_clusters_fid(sigs, verified).toPandas()
     clique = clusters[clusters.file_id.str.startswith("org/clique")]
     assert clique.cluster_id.nunique() == 1, clique
     assert len(clique) == 40
@@ -82,30 +233,13 @@ def test_overcap_fallback_broadcast_hot_classification(spark, monkeypatch):
     ~10^5+ hot keys) to a broadcast-join hot classification — with the
     salted-star recall guarantee intact. Forced here by dropping the
     bound to 0 so every hot key takes the fallback path."""
-    import pandas as pd
-
     from sketchy_spark.operators import lsh
-    from sketchy_spark.operators.cluster import assign_clusters
-    from sketchy_spark.operators.lsh import candidate_pairs_fid
-    from sketchy_spark.operators.verify import verified_pairs_cascade
     from sketchy_spark.plans.explain import physical_plan
 
     monkeypatch.setattr(lsh, "HOT_LITERAL_MAX", 0)
-    base = "\n".join(
-        f"def fn_{i}(x): return x + {i * 7}" for i in range(120)
-    )
-    rows = [
-        ("org/clique", f"src/f{m}.py", f"c{m}", "py",
-         base + f"\n# member {m}")
-        for m in range(40)
-    ]
-    files = spark.createDataFrame(
-        pd.DataFrame(
-            rows, columns=["repo", "path", "commit", "lang", "content"]
-        )
-    )
+    files = _clique_files(spark, 40)
     cfg = SketchConfig(band_skew_cap=8)
-    sigs = sketch_files(files, cfg).cache()
+    sigs = with_fid(sketch_files(files, cfg)).cache()
     n = sigs.count()
     internal = []
     cand = candidate_pairs_fid(sigs, cfg, persisted=internal)
@@ -114,15 +248,52 @@ def test_overcap_fallback_broadcast_hot_classification(spark, monkeypatch):
     # inlining a literal map (no create_map / giant isin in the plan)
     assert "create_map" not in plan and "BroadcastExchange" in plan, plan
     verified = verified_pairs_cascade(
-        cand, sigs, cfg, n_files=n, persisted=internal
+        cand, sigs, cfg, n_files=n, attach_ids=False, persisted=internal
     )
-    clusters = assign_clusters(
-        sigs, verified.select("a_id", "b_id")
-    ).toPandas()
+    clusters = assign_clusters_fid(sigs, verified).toPandas()
     assert clusters.cluster_id.nunique() == 1
     assert len(clusters) == 40
     for df in internal:
         df.unpersist()
+
+
+def test_small_file_embedded_whole_is_contained(spark):
+    """The whole-file tier: a ~300-byte file embedded verbatim in a larger
+    one is reported with containment 1.0, although it is shorter than the
+    partial-overlap kernel's 512-byte minimum run."""
+    import pandas as pd
+
+    from sketchy_spark.operators.verify import (
+        containment_candidates,
+        containment_verified,
+    )
+
+    small = "\n".join(f"cfg_{i} = load('k{i * 31}')" for i in range(14))
+    assert 250 <= len(small) <= 350
+    head = "\n".join(f"head_{i} = {i * 17}" for i in range(80))
+    tail = "\n".join(f"tail_{i} = {i * 23}" for i in range(80))
+    rows = [
+        ("org/x", "small.py", "c1", "py", small),
+        ("org/x", "big.py", "c2", "py", head + "\n" + small + "\n" + tail),
+    ]
+    for m in range(20):  # noise singletons
+        body = "\n".join(f"noise_{m}_{i} = f({i * m})" for i in range(60))
+        rows.append(("org/n", f"n{m}.py", f"d{m}", "py", body))
+    files = spark.createDataFrame(
+        pd.DataFrame(
+            rows, columns=["repo", "path", "commit", "lang", "content"]
+        )
+    )
+    sigs = sketch_files(files, CFG).cache()
+    cand = containment_candidates(sigs, CFG, min_containment=0.25)
+    hits = {
+        (r["small_id"], r["big_id"]): (r["containment"], r["overlap_chars"])
+        for r in containment_verified(cand, files, CFG).collect()
+    }
+    assert hits.get(("org/x/small.py", "org/x/big.py")) == (
+        1.0, len(small)
+    ), hits
+    sigs.unpersist()
 
 
 def test_partial_overlap_containment(spark):
@@ -296,45 +467,6 @@ def test_minima_cache_refuses_oversized_entry():
     assert "huge" not in cache._d  # not cached
     assert dict(cache._d) == held  # working set untouched
     assert cache._bytes <= cache.max_bytes
-
-
-def test_release_cascade_caches_reclaims_storage(spark):
-    """VERDICT r4 #8: ad-hoc cascades (no ``persisted`` list) park their
-    required persists in _CASCADE_CACHES; release_cascade_caches() must
-    actually unpersist them — the JVM's persistent-RDD registry shrinks
-    back to its pre-call footprint, so repeated ad-hoc use in a
-    long-lived session cannot accumulate executor storage."""
-    import pandas as pd
-
-    from sketchy_spark.operators import verify as V
-    from sketchy_spark.operators.lsh import candidate_pairs_fid
-
-    def n_persistent():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    V.release_cascade_caches()  # clean slate from earlier tests
-    base_rdds = n_persistent()
-    rows = [
-        ("org/r", f"f{i}.py", f"c{i}", "py",
-         "\n".join(f"def g_{i}_{j}(): return {i + j}" for j in range(60)))
-        for i in range(30)
-    ]
-    files = spark.createDataFrame(
-        pd.DataFrame(
-            rows, columns=["repo", "path", "commit", "lang", "content"]
-        )
-    )
-    sigs = sketch_files(files, CFG).cache()
-    n = sigs.count()
-    cand = candidate_pairs_fid(sigs, CFG)
-    # ad-hoc call: no persisted list -> caches tracked module-side
-    V.verified_pairs_cascade(cand, sigs, CFG, n_files=n).count()
-    assert len(V._CASCADE_CACHES) > 0
-    assert n_persistent() > base_rdds + 1  # sigs cache + cascade persists
-    V.release_cascade_caches()
-    assert len(V._CASCADE_CACHES) == 0
-    sigs.unpersist(blocking=True)
-    assert n_persistent() <= base_rdds
 
 
 def test_candidate_sets_agree_across_eager_and_lazy_paths(spark):
